@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Per-key bench-budget guard (round 9, VERDICT r8 item 1): the round-7
   * episode lost 40+ s of bench without any single commit noticing,
@@ -151,26 +153,22 @@ object Budget {
     "q_stats_pacf" -> 6, "q_events_attribution" -> 6,
     "q_pipeline_mix" -> 5, "q_agg_kmv_merge" -> 12)
 
-  /** Count the Spark jobs one warm run of `key` submits (the JobCount
-    * census as a reusable primitive): warm untimed first (artifact
-    * builds and codegen land outside the window), then count via a
-    * listener. Safe in the suite because sbt forks one test JVM and
-    * `testForkedParallel` defaults to false — suites run sequentially,
-    * so no concurrent suite's jobs can land in the window. */
-  def countJobs(s: SparkSession, sfDir: String, key: String): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import java.util.concurrent.atomic.AtomicInteger
-    val fn = SparkEntry.queries(key)
-    fn(s, sfDir).count()
+  /** Runs `body` and counts the Spark jobs it submits — the one
+    * job-count primitive behind JobCapSpec, graft.JobCount and Bench's
+    * `n_jobs`. Listener events post asynchronously
+    * (listenerBus.waitUntilEmpty is private[spark]), so both edges of
+    * the window are drained: poll until the count is stable across two
+    * consecutive checks. The leading drain matters because an attached
+    * listener receives queued events from before the attach, which
+    * would overcount the window on a loaded host. Callers must run
+    * nothing else on the session meanwhile. */
+  def jobsDuring[A](s: SparkSession)(body: => A): (A, Int) = {
     val counter = new AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         counter.incrementAndGet(): Unit
       }
     }
-    // listener events post asynchronously (listenerBus.waitUntilEmpty
-    // is private[spark]), so both edges of the window need draining:
-    // poll until the count is stable across two consecutive checks
     def quiesce(): Unit = {
       var prev = -1
       var spins = 0
@@ -182,17 +180,27 @@ object Budget {
     }
     s.sparkContext.addSparkListener(l)
     try {
-      // drain the WARM run's stragglers before zeroing — attached
-      // listeners receive queued events from before the attach, which
-      // would overcount the window on a loaded host
       quiesce()
       counter.set(0)
+      val a = body
+      quiesce()
+      (a, counter.get())
+    } finally s.sparkContext.removeSparkListener(l)
+  }
+
+  /** Count the Spark jobs one warm run of `key` submits: warm untimed
+    * first (artifact builds and codegen land outside the window). Safe
+    * in the suite because each forked test JVM runs its suites
+    * sequentially, so no concurrent suite's jobs can land in the
+    * window. */
+  def countJobs(s: SparkSession, sfDir: String, key: String): Int = {
+    val fn = SparkEntry.queries(key)
+    fn(s, sfDir).count()
+    jobsDuring(s) {
       fn(s, sfDir).count()
       if (sys.env.get("GRAFT_JOBCAP_BREAK_KEY").contains(key))
         (1 to 3).foreach(_ => s.range(1).count())
-      quiesce()
-      counter.get()
-    } finally s.sparkContext.removeSparkListener(l)
+    }._2
   }
 
   /** Median-of-3 of 10 trivial one-row jobs — Bench's canary_10jobs. */

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Per-key Spark JOB census — the measurement behind the round-8
   * job-reduction work (VERDICT r7 item 6): on a host that taxes every
   * job submission (the canary_10jobs axis), a key's exposure is its
   * job COUNT, not its data volume. Runs each named key once warm
-  * (after an untimed build), counting jobs via a listener.
+  * (after an untimed build), counting jobs with Budget.jobsDuring.
   * Run: sbt "runMain graft.JobCount q_graph_hits q_graph_kcore ..."
   * (no args = the bench's slowest-family defaults). */
 object JobCount {
@@ -18,8 +16,6 @@ object JobCount {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     Tables.configure(spark)
@@ -31,22 +27,15 @@ object JobCount {
       "q_graph_hits", "q_graph_closeness", "q_graph_pagerank",
       "q_graph_reach", "q_graph_kcore", "q_graph_lpa",
       "q_layout_hilbert", "q_layout_skipping", "q_vec_label_noise")
-    val counter = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(): Unit
-      }
-    })
     keys.foreach { k =>
       val fn = SparkEntry.queries(k)
       fn(spark, sfDir).count() // warm: caches/codegen built untimed
-      Thread.sleep(200)        // let straggler listener events land
-      counter.set(0)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      println(f"JOBS $k%-28s ${counter.get()}%4d jobs  $sec%6.2f s warm")
+      val (sec, jobs) = Budget.jobsDuring(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      println(f"JOBS $k%-28s $jobs%4d jobs  $sec%6.2f s warm")
     }
     spark.stop()
   }

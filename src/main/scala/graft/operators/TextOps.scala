@@ -1287,11 +1287,17 @@ object TextOps {
           " i -> struct(t[i] AS a, t[i+1] AS b))")).as("p"))
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
       .groupBy("doc_id", "a", "b").agg(count(lit(1)).as("k"))
+      // a CORPUS-scale checkpoint (one row per doc × distinct bigram),
+      // unlike the |vocab|-bounded census below
       .localCheckpoint()
+    // Not checkpointed: the census is |vocab|-bounded, so the consuming
+    // plan recomputes it cheaply. A/B at local[4] (JobCount, 7 warm
+    // runs): 10 → 9 jobs at sf0.01 and sf0.1, warm time no worse (sf0.1
+    // median of the last 4: 1.10 → 1.04 s), output row-identical under
+    // Verify (OPTIMIZATION_r12.md, "JobCapSpec breach").
     val uni = Tables.documents(s, d)
       .select(explode(toks()).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // |vocab|-bounded; feeds the total AND the b side
     // total as a window over the |vocab|-row census, carried on the
     // a-side broadcast (round 10) — the old tot aggregate + crossJoin
     // re-ran the unigram census and paid a broadcast QueryStage job

@@ -37,23 +37,6 @@ class RegistrySpec extends SparkSpec {
       assert(SparkEntry.queries.contains(k), s"audited key $k missing"))
   }
 
-  test("committed isolated floors match the registry") {
-    // the bench re-time prioritizes by measured/floor ratio, so a
-    // renamed key with a stale floor would silently fall back to the
-    // 0.4 s assumption — and a floors map far behind the registry
-    // means FloorRecord needs a re-run (FLOORS_r10.json protocol,
-    // BASELINE.md)
-    Floors.bench.keys.foreach(k =>
-      assert(SparkEntry.queries.contains(k),
-        s"floor recorded for unknown key $k — re-run graft.FloorRecord"))
-    if (Floors.bench.nonEmpty) {
-      val missing = SparkEntry.queries.keySet -- Floors.bench.keySet
-      assert(missing.size <= SparkEntry.queries.size / 20,
-        s"isolated floors missing for ${missing.size} keys " +
-          s"(${missing.take(5).mkString(", ")}…) — re-run graft.FloorRecord")
-    }
-  }
-
   test("every oracle key has rounded floats or integer/string columns only") {
     // structural guard: oracle SQL that uses round() instead of the
     // floor(x*scale+0.5)/scale parity form diverges at .5 boundaries
